@@ -1014,36 +1014,21 @@ object Retrieval {
       docs: DataFrame, idCol: String, textCol: String, table: String,
       buckets: Int = 8, batches: Int = 4, maxRows: Int = 250000): Unit = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val rows = docs
+    import graft.streaming.Replay
+    val sorted = Replay.collectBounded(docs
       .select(col(idCol).cast("long"), col(textCol).cast("string"))
-      .as[(Long, String)].collect()
-    require(rows.length <= maxRows,
-      s"streamingIndexIngestReplay: ${rows.length} docs exceed the " +
-        s"replay-harness bound $maxRows — use readStream in production")
-    val sorted = rows.sortBy(_._1)
+      .as[(Long, String)], "streamingIndexIngestReplay", maxRows)
+      .sortBy(_._1)
     // empty seed: postings/bucket spec + zeroed companions
     buildPostingsIndex(
       spark.createDataset(Seq.empty[(Long, String)]).toDF(idCol, textCol),
       idCol, textCol, table, buckets)
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val streamDf = mem.toDF().toDF(idCol, textCol)
-    val ckpt = java.nio.file.Files.createTempDirectory("ix_ckpt").toString
-    val q = streamDf.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendToPostingsIndex(batch, idCol, textCol, table, buckets)
-      }
-      .option("checkpointLocation", ckpt)
-      .start()
-    try {
-      val chunk =
-        math.max(1, math.ceil(sorted.length.toDouble / batches).toInt)
-      sorted.grouped(chunk).foreach { c =>
-        mem.addData(c.toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    val mem = Replay.memoryStream[(Long, String)](spark)
+    Replay.run(spark, "ix", Replay.Stateless, Replay.Sentinels,
+        Replay.feed(mem, sorted, batches),
+        Some((batch: DataFrame, _: Long) =>
+          appendToPostingsIndex(batch, idCol, textCol, table, buckets)))(
+      mem.toDF().toDF(idCol, textCol))
     // the micro-batches committed through foreachBatch's CLONED session;
     // refresh this session's relation cache so no reader lists files a
     // micro-batch rewrite replaced (the IVF twin's hazard, avoided

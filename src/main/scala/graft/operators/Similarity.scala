@@ -1735,36 +1735,21 @@ object Similarity {
       data: DataFrame, idCol: String, cellCol: String, vecCol: String,
       table: String, batches: Int = 4, maxRows: Int = 250000): Unit = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val rows = data.select(col(idCol).cast("long"),
+    import graft.streaming.Replay
+    val sorted = Replay.collectBounded(data.select(col(idCol).cast("long"),
         col(cellCol).cast("int"), col(vecCol))
-      .as[(Long, Int, Seq[Float])].collect()
-    require(rows.length <= maxRows,
-      s"streamingIvfIngestReplay: ${rows.length} vectors exceed the " +
-        s"replay-harness bound $maxRows — use readStream in production")
-    val sorted = rows.sortBy(_._1)
+      .as[(Long, Int, Seq[Float])], "streamingIvfIngestReplay", maxRows)
+      .sortBy(_._1)
     buildIvfIndex(
       spark.createDataset(Seq.empty[(Long, Int, Seq[Float])])
         .toDF(idCol, cellCol, vecCol),
       idCol, cellCol, vecCol, table)
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Int, Seq[Float])]
-    val streamDf = mem.toDF().toDF(idCol, cellCol, vecCol)
-    val ckpt = java.nio.file.Files.createTempDirectory("ivf_ckpt").toString
-    val q = streamDf.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendToIvfIndex(batch, idCol, cellCol, vecCol, table)
-      }
-      .option("checkpointLocation", ckpt)
-      .start()
-    try {
-      val chunk =
-        math.max(1, math.ceil(sorted.length.toDouble / batches).toInt)
-      sorted.grouped(chunk).foreach { c =>
-        mem.addData(c.toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    val mem = Replay.memoryStream[(Long, Int, Seq[Float])](spark)
+    Replay.run(spark, "ivf", Replay.Stateless, Replay.Sentinels,
+        Replay.feed(mem, sorted, batches),
+        Some((batch: DataFrame, _: Long) =>
+          appendToIvfIndex(batch, idCol, cellCol, vecCol, table)))(
+      mem.toDF().toDF(idCol, cellCol, vecCol))
     // the micro-batches committed through foreachBatch's CLONED session;
     // its table rewrites don't invalidate THIS session's relation cache
     // (the empty-seed build read _cstate back here, caching its file

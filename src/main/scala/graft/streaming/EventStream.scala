@@ -13,6 +13,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `readStream` source with a watermark (late-data bound + state eviction).
   */
 object EventStream {
+  import Replay.{Hdfs, RocksDb, Sentinels, Stateless, Watermark, collectBounded}
 
   /** Hard driver-side bound for replay-harness inputs. The `*Replay`
     * helpers exist to HASH-GATE the streaming state path: they collect a
@@ -31,22 +32,6 @@ object EventStream {
     * tuples at the widest replay row, well inside the 8 GiB driver) —
     * while a misrouted corpus-scale frame still fails fast. */
   val ReplayInputMaxRows: Int = 4000000
-
-  /** Collect a replay input with the [[ReplayInputMaxRows]] guard: the
-    * LIMIT rides into the collect job itself (no extra counting pass), and
-    * one row past the cap proves the overflow. */
-  private def collectBounded[T](ds: org.apache.spark.sql.Dataset[T],
-      helper: String, maxRows: Int): Array[T] = {
-    require(maxRows >= 1 && maxRows <= ReplayInputMaxRows,
-      s"$helper: maxRows=$maxRows out of [1, $ReplayInputMaxRows]")
-    val arr = ds.limit(maxRows + 1).collect()
-    require(arr.length <= maxRows,
-      s"$helper: replay input exceeds maxRows=$maxRows rows. Replay " +
-        "harnesses materialize their bounded input on the driver to feed " +
-        "micro-batches (verification use); route large streams through " +
-        "the production entry point (a pure streaming plan) instead.")
-    arr
-  }
 
   /** Tumbling-window counts + sums per event type. On a stream, the 10-minute
     * watermark bounds state; on a batch frame it is a no-op. Partial
@@ -126,7 +111,7 @@ object EventStream {
         lit("__sentinel").as("event_type"), lit(0.0).as("value"))
       .coalesce(1).write.mode("append").parquet(inDir)
     val schema = spark.read.parquet(inDir).schema
-    withReplayShuffle(spark) {
+    Replay.withConfs(spark, Hdfs, Watermark) {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir)
       val q = windowedCountsExact(stream, windowLength)
@@ -151,9 +136,9 @@ object EventStream {
     * that is the recovery property RestartRecoverySpec pins against the
     * batch oracle.
     *
-    * `rocksDb = true` swaps in the RocksDB state store provider with
-    * changelog checkpointing for the run (the production setting once
-    * state outgrows the executor heap); results are identical either way.
+    * `rocksDb = true` runs it under [[Replay]]'s RocksDB confs (the
+    * production setting once state outgrows the executor heap); results
+    * are identical either way.
     *
     * Expected input schema: (ts TIMESTAMP, user_id LONG, value DOUBLE). */
   def sessionWindowPipeline(spark: SparkSession, inDir: String,
@@ -163,7 +148,7 @@ object EventStream {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("ts", TimestampType),
       StructField("user_id", LongType), StructField("value", DoubleType)))
-    def run(): Unit = withReplayShuffle(spark) {
+    Replay.withConfs(spark, if (rocksDb) RocksDb else Hdfs, Watermark) {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir)
       val q = sessionWindows(stream, gap, watermark)
@@ -174,7 +159,6 @@ object EventStream {
         .start()
       q.awaitTermination()
     }
-    if (rocksDb) withRocksDb(spark)(run()) else run()
   }
 
   /** Native session-window aggregation — Spark's `session_window` groupBy
@@ -222,51 +206,36 @@ object EventStream {
 
   /** Replay a STATIC events frame through [[sessionWindows]] as a real
     * watermarked stream (the x15 pattern applied to the NATIVE
-    * session_window aggregate): time-ordered micro-batches into a
-    * MemoryStream, then one sentinel event per user far past the last
-    * timestamp so the watermark overtakes every real session's end and
-    * Append mode emits it. Sentinel sessions themselves stay open (the
-    * watermark never passes them) and are therefore never emitted, so the
-    * returned frame must equal the batch [[sessionWindows]] of the same
-    * input — the merging-session STATE PATH, not just its batch plan, is
-    * hash-gated. */
+    * session_window aggregate). One sentinel event per user lands far past
+    * the last timestamp; the watermark it sets closes every real session,
+    * while the sentinel sessions stay open and are never emitted. The
+    * result must equal the batch [[sessionWindows]] of the same input. */
   def sessionWindowsReplay(spark: SparkSession, events: DataFrame,
       gap: String = "30 minutes", batches: Int = 4,
       maxRows: Int = ReplayInputMaxRows): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val rows = collectBounded(events.select(col("user_id").cast("long"),
         unix_micros(col("ts")), col("value").cast("double"))
       .as[(Long, Long, Double)], "sessionWindowsReplay", maxRows)
       .sortBy(r => (r._2, r._1))
     val users = rows.map(_._1).distinct.toSeq
-    val gapUs = org.apache.spark.sql.catalyst.util.IntervalUtils
-      .stringToInterval(org.apache.spark.unsafe.types.UTF8String.fromString(gap))
-    val gapTotalUs = gapUs.microseconds + gapUs.days * 86400000000L
     val maxUs = if (rows.isEmpty) 0L else rows.iterator.map(_._2).max
-    val sentinelUs = maxUs + 3 * gapTotalUs
+    val sentinelUs = maxUs + 3 * intervalUs(gap)
 
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Double)]
+    val mem = Replay.memoryStream[(Long, Long, Double)](spark)
     val streamDf = mem.toDF().toDF("user_id", "ts_us", "value")
       .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts"), col("value"))
-    val name = "sesswin_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("sesswin_ckpt").toString
-    withReplayShuffle(spark) {
-      val q = sessionWindows(streamDf, gap, watermark = gap)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-        .start()
-      try {
-        val chunk = math.max(1, math.ceil(rows.length.toDouble / batches).toInt)
-        rows.grouped(chunk).foreach { c =>
-          mem.addData(c.toSeq)
-          q.processAllAvailable()
-        }
-        mem.addData(users.map(u => (u, sentinelUs, 0.0)))
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    spark.table(name)
+    val ran = Replay.run(spark, "sesswin", Hdfs, Watermark,
+        Replay.feed(mem, rows, batches, users.map(u => (u, sentinelUs, 0.0))))(
+      sessionWindows(streamDf, gap, watermark = gap))
+    spark.table(ran.name)
+  }
+
+  /** A calendar-interval string (`"30 minutes"`) in microseconds. */
+  private def intervalUs(interval: String): Long = {
+    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
+      org.apache.spark.unsafe.types.UTF8String.fromString(interval))
+    iv.microseconds + iv.days * 86400000000L
   }
 
   /** Per-user sessionization with mapGroupsWithState: a session closes after
@@ -352,7 +321,6 @@ object EventStream {
       gap: String = "30 minutes", batches: Int = 4,
       maxRows: Int = ReplayInputMaxRows): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val rows = collectBounded(events.select(col("event_id").cast("long"),
         col("user_id").cast("long"), unix_micros(col("ts")),
         col("value").cast("double"))
@@ -360,13 +328,11 @@ object EventStream {
       .sortBy(r => (r._3, r._1))
     val doubled = rows.flatMap(r => Seq(r, r)) // exact duplicate per event
     val users = rows.map(_._2).distinct.toSeq
-    val gapIv = org.apache.spark.sql.catalyst.util.IntervalUtils
-      .stringToInterval(org.apache.spark.unsafe.types.UTF8String.fromString(gap))
-    val gapTotalUs = gapIv.microseconds + gapIv.days * 86400000000L
+    val gapTotalUs = intervalUs(gap)
     val maxUs = if (rows.isEmpty) 0L else rows.iterator.map(_._3).max
     val sentinelUs = maxUs + 3 * gapTotalUs
 
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long, Double)]
+    val mem = Replay.memoryStream[(Long, Long, Long, Double)](spark)
     val chained = mem.toDF().toDF("event_id", "user_id", "ts_us", "value")
       .select(col("event_id"), col("user_id"),
         timestamp_micros(col("ts_us")).as("ts"), col("value"))
@@ -378,27 +344,12 @@ object EventStream {
       .select(col("user_id"), col("w.start").as("session_start"),
         col("w.end").as("session_end"), col("n_events"),
         round(col("__tv").cast("double"), 2).as("total_value"))
-    val name = "dedupsess_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("dedupsess_ckpt").toString
-    withNoDataBatchesOff(spark) { withReplayShuffle(spark) {
-      val q = chained.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-        .start()
-      try {
-        val chunk = math.max(1, math.ceil(doubled.length.toDouble / batches).toInt)
-        doubled.grouped(chunk).foreach { c =>
-          mem.addData(c.toSeq)
-          q.processAllAvailable()
-        }
-        mem.addData(users.zipWithIndex.map { case (u, i) =>
-          (-1L - i, u, sentinelUs, 0.0) })
-        q.processAllAvailable()
-        mem.addData(users.zipWithIndex.map { case (u, i) =>
-          (-1000000L - i, u, sentinelUs + gapTotalUs, 0.0) })
-        q.processAllAvailable()
-      } finally q.stop()
-    } }
-    spark.table(name)
+    val ran = Replay.run(spark, "dedupsess", Hdfs, Sentinels,
+        Replay.feed(mem, doubled, batches,
+          users.zipWithIndex.map { case (u, i) => (-1L - i, u, sentinelUs, 0.0) },
+          users.zipWithIndex.map { case (u, i) =>
+            (-1000000L - i, u, sentinelUs + gapTotalUs, 0.0) }))(chained)
+    spark.table(ran.name)
   }
 
   /** [[sessionizeFull]] driven by EVENT-TIME TIMEOUTS — the third state
@@ -420,12 +371,7 @@ object EventStream {
     val spark = events.sparkSession
     import spark.implicits._
     val gapUs = gapSeconds * 1000000L
-    val typed = events
-      .select(col("user_id").cast("long").as("user_id"), col("ts"))
-      .withWatermark("ts", "0 seconds")
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"))
-      .as[(Long, java.sql.Timestamp, Long)]
-    typed.groupByKey(_._1)
+    timedSessionInput(events).groupByKey(_._1)
       .flatMapGroupsWithState[OpenSession, ClosedSession](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (user, rows, state: GroupState[OpenSession]) =>
@@ -459,50 +405,58 @@ object EventStream {
         timestamp_micros(col("start_us")).as("session_start"))
   }
 
+  /** Events as (user_id, ts, ts_us) behind a zero-delay watermark: the
+    * input of the event-time sessionizers ([[sessionizeTimeout]],
+    * [[sessionizeTws]], [[sessionizeBootstrapReplay]]). */
+  private def timedSessionInput(
+      events: DataFrame): org.apache.spark.sql.Dataset[(Long, java.sql.Timestamp, Long)] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    events
+      .select(col("user_id").cast("long").as("user_id"), col("ts"))
+      .withWatermark("ts", "0 seconds")
+      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"))
+      .as[(Long, java.sql.Timestamp, Long)]
+  }
+
+  /** The (user_id, ts_us) replay input of the event-time sessionizers,
+    * time-ordered, with its MemoryStream and the stream's (user_id, ts)
+    * frame. */
+  private def userTimeFeed(spark: SparkSession, events: DataFrame,
+      helper: String, maxRows: Int) = {
+    import spark.implicits._
+    val rows = collectBounded(
+      events.select(col("user_id").cast("long"), unix_micros(col("ts")))
+        .as[(Long, Long)], helper, maxRows)
+      .sortBy(r => (r._2, r._1))
+    val mem = Replay.memoryStream[(Long, Long)](spark)
+    (rows, mem, mem.toDF().toDF("user_id", "ts_us")
+      .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts")))
+  }
+
+  /** Two far-future events for the reserved user -1: the first moves the
+    * watermark past every last event + gap, the second runs the fired
+    * timeouts, which emit every real user's tail session. */
+  private def drainSteps(lastUs: Long, gapSeconds: Long): Seq[Seq[(Long, Long)]] = {
+    val gapUs = gapSeconds * 1000000L
+    Seq(Seq((-1L, lastUs + 2 * gapUs)), Seq((-1L, lastUs + 4 * gapUs)))
+  }
+
   /** Replay a STATIC events frame through [[sessionizeTimeout]]: unlike
-    * [[sessionizeReplay]], NO per-user sentinel is needed — two far-future
-    * events for one reserved user (-1) advance the watermark and then let
-    * the fired timeouts drain, closing every real user's tail session.
+    * [[sessionizeReplay]], NO per-user sentinel is needed — the
+    * reserved-user [[drainSteps]] close every real user's tail session.
     * The result must equal the batch sessionization — the timeout path's
     * correctness gate. */
   def sessionizeTimeoutReplay(spark: SparkSession, events: DataFrame,
       gapSeconds: Long = 1800, batches: Int = 4,
       maxRows: Int = ReplayInputMaxRows): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val rows = collectBounded(
-      events.select(col("user_id").cast("long"), unix_micros(col("ts")))
-        .as[(Long, Long)], "sessionizeTimeoutReplay", maxRows)
-      .sortBy(r => (r._2, r._1))
+    val (rows, mem, streamDf) =
+      userTimeFeed(spark, events, "sessionizeTimeoutReplay", maxRows)
     val maxUs = if (rows.isEmpty) 0L else rows.iterator.map(_._2).max
-    val gapUs = gapSeconds * 1000000L
-    val sentinelUs = maxUs + 2 * gapUs
-
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-    val streamDf = mem.toDF().toDF("user_id", "ts_us")
-      .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts"))
-    val name = "tsessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("tsess_ckpt").toString
-    withNoDataBatchesOff(spark) { withReplayShuffle(spark) {
-      val q = sessionizeTimeout(streamDf, gapSeconds)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-        .start()
-      try {
-        val chunk = math.max(1, math.ceil(rows.length.toDouble / batches).toInt)
-        rows.grouped(chunk).foreach { c =>
-          mem.addData(c.toSeq)
-          q.processAllAvailable()
-        }
-        // batch 1: watermark jumps past every last-event + gap;
-        // batch 2: the fired timeouts are processed and their sessions emitted
-        mem.addData(Seq((-1L, sentinelUs)))
-        q.processAllAvailable()
-        mem.addData(Seq((-1L, sentinelUs + 2 * gapUs)))
-        q.processAllAvailable()
-      } finally q.stop()
-    } }
-    spark.table(name).filter(col("user_id") >= 0)
+    val ran = Replay.run(spark, "tsessions", Hdfs, Sentinels,
+        Replay.feed(mem, rows, batches, drainSteps(maxUs, gapSeconds): _*))(
+      sessionizeTimeout(streamDf, gapSeconds))
+    spark.table(ran.name).filter(col("user_id") >= 0)
   }
 
   /** [[sessionizeFull]] on Spark 4's `transformWithState` — the arbitrary-
@@ -632,12 +586,7 @@ object EventStream {
     val spark = events.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.streaming.TimeMode
-    val typed = events
-      .select(col("user_id").cast("long").as("user_id"), col("ts"))
-      .withWatermark("ts", "0 seconds")
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"))
-      .as[(Long, java.sql.Timestamp, Long)]
-    typed.groupByKey(_._1)
+    timedSessionInput(events).groupByKey(_._1)
       .transformWithState(new SessionProcessor(gapSeconds),
         TimeMode.EventTime(), OutputMode.Append())
       .toDF()
@@ -646,53 +595,25 @@ object EventStream {
   }
 
   /** Replay a STATIC events frame through [[sessionizeTws]] — the same
-    * watermark-advance drain as [[sessionizeTimeoutReplay]] (no per-user
-    * sentinel; fired TIMERS close every tail session), with the RocksDB
-    * provider the operator requires swapped in for the query's lifetime. */
+    * [[drainSteps]] as [[sessionizeTimeoutReplay]], with fired TIMERS
+    * closing every tail session. */
   def sessionizeTwsReplay(spark: SparkSession, events: DataFrame,
       gapSeconds: Long = 1800, batches: Int = 4,
       maxRows: Int = ReplayInputMaxRows): DataFrame =
-    runTwsReplay(spark, events, gapSeconds, batches, maxRows)._1
+    spark.table(runTwsReplay(spark, events, gapSeconds, batches, maxRows).name)
+      .filter(col("user_id") >= 0)
 
-  /** [[sessionizeTwsReplay]] body, also handing back the query's
-    * checkpoint location so [[twsStateSnapshot]] can batch-read the
-    * RocksDB state it left behind. */
+  /** [[sessionizeTwsReplay]] body; its checkpoint lets [[twsStateSnapshot]]
+    * batch-read the RocksDB state it left behind. */
   private def runTwsReplay(spark: SparkSession, events: DataFrame,
       gapSeconds: Long, batches: Int,
-      maxRows: Int = ReplayInputMaxRows): (DataFrame, String) = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val rows = collectBounded(
-      events.select(col("user_id").cast("long"), unix_micros(col("ts")))
-        .as[(Long, Long)], "sessionizeTwsReplay", maxRows)
-      .sortBy(r => (r._2, r._1))
+      maxRows: Int = ReplayInputMaxRows): Replay.Ran = {
+    val (rows, mem, streamDf) =
+      userTimeFeed(spark, events, "sessionizeTwsReplay", maxRows)
     val maxUs = if (rows.isEmpty) 0L else rows.iterator.map(_._2).max
-    val gapUs = gapSeconds * 1000000L
-    val sentinelUs = maxUs + 2 * gapUs
-
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-    val streamDf = mem.toDF().toDF("user_id", "ts_us")
-      .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts"))
-    val name = "wsessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("wsess_ckpt").toString
-    try withRocksDb(spark) { withReplayShuffle(spark, 4) {
-      val q = sessionizeTws(streamDf, gapSeconds)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-        .start()
-      try {
-        val chunk = math.max(1, math.ceil(rows.length.toDouble / batches).toInt)
-        rows.grouped(chunk).foreach { c =>
-          mem.addData(c.toSeq)
-          q.processAllAvailable()
-        }
-        mem.addData(Seq((-1L, sentinelUs)))
-        q.processAllAvailable()
-        mem.addData(Seq((-1L, sentinelUs + 2 * gapUs)))
-        q.processAllAvailable()
-      } finally q.stop()
-    } }
-    (spark.table(name).filter(col("user_id") >= 0), ckpt)
+    Replay.run(spark, "wsessions", RocksDb, Sentinels,
+        Replay.feed(mem, rows, batches, drainSteps(maxUs, gapSeconds): _*))(
+      sessionizeTws(streamDf, gapSeconds))
   }
 
   /** The remaining two transformWithState primitives, each gated through
@@ -750,57 +671,32 @@ object EventStream {
     }
   }
 
-  /** Replay `events` through a no-output stateful processor and hand back
-    * the checkpoint for state introspection (no watermark, no timers —
-    * TimeMode.None; the drain IS the last processed batch). */
-  private def runSilentStateReplay[T <: Product : org.apache.spark.sql.Encoder](
-      spark: SparkSession, rows: Seq[T], toStream: DataFrame => DataFrame,
-      batches: Int): String = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T]
-    val name = "silent_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("silent_ckpt").toString
-    withRocksDb(spark) { withReplayShuffle(spark, 4) {
-      val q = toStream(mem.toDF())
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-        .start()
-      try {
-        val chunk = math.max(1, math.ceil(rows.length.toDouble / batches).toInt)
-        rows.grouped(chunk).foreach { c =>
-          mem.addData(c.toSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } }
-    ckpt
-  }
-
   /** Last-n-events-per-user via `ListState`, read back through the state
     * data source: returns (user_id, event_id) — each user's n most recent
     * events by (ts, event_id). The oracle recomputes the same window from
-    * the batch table. */
+    * the batch table. No watermark and no timers (TimeMode.None): the state
+    * after the last data step is the product. */
   def lastNStateSnapshot(spark: SparkSession, events: DataFrame,
       n: Int = 3, batches: Int = 4,
       maxRows: Int = ReplayInputMaxRows): DataFrame = {
     import spark.implicits._
+    import org.apache.spark.sql.streaming.TimeMode
     val rows = collectBounded(events.select(col("user_id").cast("long"),
         col("event_id").cast("long"), unix_micros(col("ts")))
       .as[(Long, Long, Long)], "lastNStateSnapshot", maxRows)
       .sortBy(r => (r._3, r._2))
-    val ckpt = runSilentStateReplay[(Long, Long, Long)](spark, rows.toSeq,
-      df => {
-        import org.apache.spark.sql.streaming.TimeMode
-        df.toDF("user_id", "event_id", "ts_us")
-          .as[(Long, Long, Long)]
-          .groupByKey(_._1)
-          .transformWithState(new LastNProcessor(n),
-            TimeMode.None(), OutputMode.Append())
-          .toDF()
-      }, batches)
+    val mem = Replay.memoryStream[(Long, Long, Long)](spark)
+    val ran = Replay.run(spark, "silent", RocksDb, Sentinels,
+        Replay.feed(mem, rows, batches)) {
+      mem.toDF().toDF("user_id", "event_id", "ts_us")
+        .as[(Long, Long, Long)]
+        .groupByKey(_._1)
+        .transformWithState(new LastNProcessor(n),
+          TimeMode.None(), OutputMode.Append())
+        .toDF()
+    }
     spark.read.format("statestore")
-      .option("path", ckpt).option("stateVarName", "recent")
+      .option("path", ran.ckpt).option("stateVarName", "recent")
       .load()
       .select(col("key.value").as("user_id"),
         col("list_element._2").as("event_id"))
@@ -812,23 +708,24 @@ object EventStream {
   def typeCountsStateSnapshot(spark: SparkSession, events: DataFrame,
       batches: Int = 4, maxRows: Int = ReplayInputMaxRows): DataFrame = {
     import spark.implicits._
+    import org.apache.spark.sql.streaming.TimeMode
     val rows = collectBounded(events.select(col("event_id").cast("long"),
         col("user_id").cast("long"), col("event_type"))
       .as[(Long, Long, String)], "typeCountsStateSnapshot", maxRows)
       .sortBy(_._1)
       .map(r => (r._2, r._3))
-    val ckpt = runSilentStateReplay[(Long, String)](spark, rows.toSeq,
-      df => {
-        import org.apache.spark.sql.streaming.TimeMode
-        df.toDF("user_id", "event_type")
-          .as[(Long, String)]
-          .groupByKey(_._1)
-          .transformWithState(new TypeCountProcessor,
-            TimeMode.None(), OutputMode.Append())
-          .toDF()
-      }, batches)
+    val mem = Replay.memoryStream[(Long, String)](spark)
+    val ran = Replay.run(spark, "silent", RocksDb, Sentinels,
+        Replay.feed(mem, rows, batches)) {
+      mem.toDF().toDF("user_id", "event_type")
+        .as[(Long, String)]
+        .groupByKey(_._1)
+        .transformWithState(new TypeCountProcessor,
+          TimeMode.None(), OutputMode.Append())
+        .toDF()
+    }
     spark.read.format("statestore")
-      .option("path", ckpt).option("stateVarName", "counts")
+      .option("path", ran.ckpt).option("stateVarName", "counts")
       .load()
       .select(col("key.value").as("user_id"),
         col("user_map_key.value").as("event_type"),
@@ -852,7 +749,6 @@ object EventStream {
     import org.apache.spark.sql.streaming.TimeMode
     import org.apache.spark.sql.Encoders
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val gapUs = gapSeconds * 1000000L
 
     val evUs = events.select(col("user_id").cast("long").as("user_id"),
@@ -889,66 +785,21 @@ object EventStream {
         timestamp_micros(col("start_us")).as("session_start"))
 
     // streaming suffix: only events AFTER the cut, with the handoff state
-    val rows = collectBounded(events.filter(unix_micros(col("ts")) > cutUs)
-      .select(col("user_id").cast("long"), unix_micros(col("ts")))
-      .as[(Long, Long)], "sessionizeBootstrapReplay", maxRows)
-      .sortBy(r => (r._2, r._1))
-    val sentinelUs = maxUs + 2 * gapUs
-
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-    val streamTyped = mem.toDF().toDF("user_id", "ts_us")
-      .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts"))
-      .select(col("user_id").cast("long").as("user_id"), col("ts"))
-      .withWatermark("ts", "0 seconds")
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"))
-      .as[(Long, java.sql.Timestamp, Long)]
-    val name = "bsessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("bsess_ckpt").toString
-    withRocksDb(spark) { withReplayShuffle(spark, 4) {
-      val q = streamTyped.groupByKey(_._1)
+    val (rows, mem, streamDf) = userTimeFeed(spark,
+      events.filter(unix_micros(col("ts")) > cutUs),
+      "sessionizeBootstrapReplay", maxRows)
+    val ran = Replay.run(spark, "bsessions", RocksDb, Sentinels,
+        Replay.feed(mem, rows, batches, drainSteps(maxUs, gapSeconds): _*)) {
+      timedSessionInput(streamDf).groupByKey(_._1)
         .transformWithState(new SessionBootstrapProcessor(gapSeconds),
           TimeMode.EventTime(), OutputMode.Append(), handoff,
           Encoders.product[ClosedSession], Encoders.product[OpenSession])
         .toDF()
         .select(col("user_id"), col("session_id"), col("n_events"),
           timestamp_micros(col("start_us")).as("session_start"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-        .start()
-      try {
-        val chunk = math.max(1, math.ceil(rows.length.toDouble / batches).toInt)
-        rows.grouped(chunk).foreach { c =>
-          mem.addData(c.toSeq)
-          q.processAllAvailable()
-        }
-        mem.addData(Seq((-1L, sentinelUs)))
-        q.processAllAvailable()
-        mem.addData(Seq((-1L, sentinelUs + 2 * gapUs)))
-        q.processAllAvailable()
-      } finally q.stop()
-    } }
-    closedBatch.unionByName(
-      spark.table(name).filter(col("user_id") >= 0))
-  }
-
-  /** Run `body` with the RocksDB state store provider + changelog
-    * checkpointing swapped in (restored after): transformWithState only
-    * runs on RocksDB, and changelog checkpointing makes each micro-batch
-    * commit upload only the delta (full snapshots move to background
-    * maintenance) — the production-recommended setting once state is
-    * large, and measurably faster even on the local replay. */
-  private def withRocksDb[T](spark: SparkSession)(body: => T): T = {
-    val swapped = Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val prev = swapped.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    swapped.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
+    closedBatch.unionByName(
+      spark.table(ran.name).filter(col("user_id") >= 0))
   }
 
   /** Batch-introspect the streaming state [[sessionizeTws]] leaves behind,
@@ -964,9 +815,8 @@ object EventStream {
     * diagnosed with a batch query instead of replaying the stream. */
   def twsStateSnapshot(spark: SparkSession, events: DataFrame,
       gapSeconds: Long = 1800, batches: Int = 4): DataFrame = {
-    val (_, ckpt) = runTwsReplay(spark, events, gapSeconds, batches)
     spark.read.format("statestore")
-      .option("path", ckpt)
+      .option("path", runTwsReplay(spark, events, gapSeconds, batches).ckpt)
       .option("stateVarName", "session")
       .load()
       .select(col("key.value").as("user_id"),
@@ -975,86 +825,22 @@ object EventStream {
       .filter(col("user_id") >= 0)
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily lowered:
-    * every stateful streaming operator commits one state store PER shuffle
-    * partition PER micro-batch, so a small bounded replay pays the session
-    * default (32×) in fixed state-store overhead each round regardless of
-    * data volume. 8 shards keep the replay parallel while cutting that
-    * fixed cost 4×; a production stream sizes the state width to its real
-    * key volume instead. Result content is partition-count-independent
-    * (the oracle gates prove it); the previous value is always restored. */
-  private def withReplayShuffle[T](spark: SparkSession, n: Int = 8)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
-  /** Disable Spark's no-data micro-batches for a replay whose FINAL
-    * emissions are all driven by explicit sentinel DATA batches (the
-    * two-step sentinel flush: batch 1 jumps the watermark, batch 2
-    * processes the fired timers/evictions). For those replays the
-    * no-data batches Spark inserts after every data batch re-run the
-    * whole micro-batch planning loop and emit nothing — measured
-    * 0.54-0.78× on the sessionize-timeout / chained-session /
-    * outer-attribution / dedupe replays (r16).
-    *
-    * DO NOT apply where emission relies on a watermark-only batch:
-    * the file-source session pipeline (x106) LOSES final sessions
-    * without no-data batches (measured — file feeds have no sentinel
-    * mechanism), and the transformWithState list/map-state replays
-    * measured 1.7-2.2× SLOWER with them off. Scoped per-operator for
-    * exactly that reason; conf restored on exit. */
-  private def withNoDataBatchesOff[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** Replay a STATIC events frame through [[sessionizeFull]] as a real
-    * stream: time-ordered micro-batches into a MemoryStream, then one
-    * sentinel event per user far past the last timestamp to flush open
-    * sessions. Returns the static closed-session frame — which therefore
-    * must equal the batch sessionization of the same input, giving the
-    * streaming path a correctness gate instead of spec-only coverage. */
+    * stream, with one sentinel event per user far past the last timestamp
+    * to close every open session. The result must equal the batch
+    * sessionization of the same input. */
   def sessionizeReplay(spark: SparkSession, events: DataFrame,
       gapSeconds: Long = 1800, batches: Int = 4,
       maxRows: Int = ReplayInputMaxRows): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val rows = collectBounded(
-      events.select(col("user_id").cast("long"), unix_micros(col("ts")))
-        .as[(Long, Long)], "sessionizeReplay", maxRows)
-      .sortBy(r => (r._2, r._1))
+    val (rows, mem, streamDf) =
+      userTimeFeed(spark, events, "sessionizeReplay", maxRows)
     val users = rows.map(_._1).distinct.toSeq
     val maxUs = if (rows.isEmpty) 0L else rows.iterator.map(_._2).max
     val sentinelUs = maxUs + 2 * gapSeconds * 1000000L
-
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-    val streamDf = mem.toDF().toDF("user_id", "ts_us")
-      .select(col("user_id"), timestamp_micros(col("ts_us")).as("ts"))
-    val name = "sessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("sess_ckpt").toString
-    withReplayShuffle(spark) {
-      val q = sessionizeFull(streamDf, gapSeconds)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-        .start()
-      try {
-        val chunk = math.max(1, math.ceil(rows.length.toDouble / batches).toInt)
-        rows.grouped(chunk).foreach { c =>
-          mem.addData(c.toSeq)
-          q.processAllAvailable()
-        }
-        mem.addData(users.map(u => (u, sentinelUs)))
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    spark.table(name)
+    val ran = Replay.run(spark, "sessions", Hdfs, Sentinels,
+        Replay.feed(mem, rows, batches, users.map(u => (u, sentinelUs))))(
+      sessionizeFull(streamDf, gapSeconds))
+    spark.table(ran.name)
   }
 
   /** Streaming dedup: keep the first occurrence per key, with state bounded
@@ -1070,43 +856,27 @@ object EventStream {
     else events.dropDuplicates(keys)
 
   /** Replay a STATIC events frame (with planted duplicates) through
-    * [[dedupeStream]] as a real MemoryStream in time-ordered micro-batches;
-    * returns the static deduplicated frame. Duplicates arriving within the
-    * watermark of their original are dropped, so replaying `df ∪ df` must
-    * return exactly `df`. */
+    * [[dedupeStream]]. Duplicates arriving within the watermark of their
+    * original are dropped, so replaying `df ∪ df` must return exactly
+    * `df`. */
   def dedupeReplay(spark: SparkSession, events: DataFrame,
       keys: Seq[String], watermark: String = "10 minutes",
       batches: Int = 4, maxRows: Int = ReplayInputMaxRows): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val rows = collectBounded(events.select(col("event_id").cast("long"),
         unix_micros(col("ts")), col("user_id").cast("long"),
         col("event_type").cast("string"), col("value").cast("double"))
       .as[(Long, Long, Long, String, Double)], "dedupeReplay", maxRows)
       .sortBy(r => (r._2, r._1))
 
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, Long, String, Double)]
+    val mem = Replay.memoryStream[(Long, Long, Long, String, Double)](spark)
     val streamDf = mem.toDF()
       .toDF("event_id", "ts_us", "user_id", "event_type", "value")
       .select(col("event_id"), timestamp_micros(col("ts_us")).as("ts"),
         col("user_id"), col("event_type"), col("value"))
-    val name = "dedupe_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("dedupe_ckpt").toString
-    withNoDataBatchesOff(spark) { withReplayShuffle(spark) {
-      val q = dedupeStream(streamDf, keys)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-        .start()
-      try {
-        val chunk = math.max(1, math.ceil(rows.length.toDouble / batches).toInt)
-        rows.grouped(chunk).foreach { c =>
-          mem.addData(c.toSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } }
-    spark.table(name)
+    val ran = Replay.run(spark, "dedupe", Hdfs, Sentinels,
+      Replay.feed(mem, rows, batches))(dedupeStream(streamDf, keys))
+    spark.table(ran.name)
   }
 
   /** Stream-stream interval join: attribute each purchase to the same
@@ -1144,7 +914,6 @@ object EventStream {
       joinType: String = "inner",
       maxRows: Int = ReplayInputMaxRows): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     def side(tpe: String) = collectBounded(
       events.filter(col("event_type") === tpe)
         .select(col("event_id").cast("long"), unix_micros(col("ts")),
@@ -1156,46 +925,36 @@ object EventStream {
     val allTs = (clicks.map(_._2) ++ purchases.map(_._2)).sorted
     val cuts = (1 until batches).map(i => allTs((allTs.length.toLong * i / batches).toInt))
 
-    val memC = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-    val memP = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
+    // step i feeds each side's rows with ts ≤ cut i that earlier steps did not
+    val bounds = cuts :+ Long.MaxValue
+    def lockstep(rows: Array[(Long, Long, Long)]) =
+      (0 +: bounds.map(hi => rows.count(_._2 <= hi))).sliding(2)
+        .map(e => rows.slice(e(0), e(1)).toSeq).toSeq
+    // OUTER emission is watermark-driven: an unmatched purchase only
+    // surfaces with null click columns once the watermark proves no
+    // matching click can still arrive. Advance both sides twice
+    // (watermark updates at batch END, eviction happens a batch
+    // later) with reserved-user sentinels, filtered below.
+    val maxUs = (clicks.map(_._2) ++ purchases.map(_._2) :+ 0L).max
+    val winUs = withinSeconds * 1000000L
+    val drain = if (joinType == "inner") Nil
+      else Seq(maxUs + 3 * winUs, maxUs + 6 * winUs)
+        .map(t => (Seq((-1L, t, -1L)), Seq((-2L, t, -1L))))
+    val memC = Replay.memoryStream[(Long, Long, Long)](spark)
+    val memP = Replay.memoryStream[(Long, Long, Long)](spark)
+    val steps = (lockstep(clicks).zip(lockstep(purchases)) ++ drain).map {
+      case (c, p) => () => {
+        if (c.nonEmpty) memC.addData(c)
+        if (p.nonEmpty) memP.addData(p)
+      }
+    }
     def streamDf(m: org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]) =
       m.toDF().toDF("event_id", "ts_us", "user_id")
         .select(col("event_id"), timestamp_micros(col("ts_us")).as("ts"), col("user_id"))
-    val name = "attr_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("attr_ckpt").toString
-    withNoDataBatchesOff(spark) { withReplayShuffle(spark) {
-      val q = attributionJoin(streamDf(memC), streamDf(memP), withinSeconds,
-          joinType = joinType)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-        .start()
-      try {
-        val bounds = cuts :+ Long.MaxValue
-        var (ci, pi) = (0, 0)
-        bounds.foreach { hi =>
-          val cChunk = clicks.drop(ci).takeWhile(_._2 <= hi); ci += cChunk.length
-          val pChunk = purchases.drop(pi).takeWhile(_._2 <= hi); pi += pChunk.length
-          if (cChunk.nonEmpty) memC.addData(cChunk.toSeq)
-          if (pChunk.nonEmpty) memP.addData(pChunk.toSeq)
-          q.processAllAvailable()
-        }
-        if (joinType != "inner") {
-          // OUTER emission is watermark-driven: an unmatched purchase only
-          // surfaces with null click columns once the watermark proves no
-          // matching click can still arrive. Advance both sides twice
-          // (watermark updates at batch END, eviction happens a batch
-          // later) with reserved-user sentinels, filtered below.
-          val maxUs = (clicks.map(_._2) ++ purchases.map(_._2) :+ 0L).max
-          val winUs = withinSeconds * 1000000L
-          Seq(maxUs + 3 * winUs, maxUs + 6 * winUs).foreach { t =>
-            memC.addData(Seq((-1L, t, -1L)))
-            memP.addData(Seq((-2L, t, -1L)))
-            q.processAllAvailable()
-          }
-        }
-      } finally q.stop()
-    } }
-    spark.table(name).filter(col("user_id") >= 0)
+    val ran = Replay.run(spark, "attr", Hdfs, Sentinels, steps)(
+      attributionJoin(streamDf(memC), streamDf(memP), withinSeconds,
+        joinType = joinType))
+    spark.table(ran.name).filter(col("user_id") >= 0)
   }
 
   /** Stream-static enrichment join: each micro-batch joins against the
@@ -1212,30 +971,20 @@ object EventStream {
   def enrichReplay(spark: SparkSession, events: DataFrame, dim: DataFrame,
       batches: Int = 2, maxRows: Int = ReplayInputMaxRows): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val rows = collectBounded(events.select(col("event_id").cast("long"),
         unix_micros(col("ts")), col("user_id").cast("long"))
       .as[(Long, Long, Long)], "enrichReplay", maxRows)
       .sortBy(r => (r._2, r._1))
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
+    val mem = Replay.memoryStream[(Long, Long, Long)](spark)
     val streamDf = mem.toDF().toDF("event_id", "ts_us", "user_id")
       .select(col("event_id"), timestamp_micros(col("ts_us")).as("ts"),
         col("user_id"))
-    val name = "enrich_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = java.nio.file.Files.createTempDirectory("enrich_ckpt").toString
-    val q = enrichStream(streamDf, dim, col("c_custkey") === col("user_id") + 1)
-      .select(col("event_id"), col("user_id"), col("c_mktsegment"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode(OutputMode.Append()).option("checkpointLocation", ckpt)
-      .start()
-    try {
-      val chunk = math.max(1, math.ceil(rows.length.toDouble / batches).toInt)
-      rows.grouped(chunk).foreach { c =>
-        mem.addData(c.toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.table(name)
+    val ran = Replay.run(spark, "enrich", Stateless, Sentinels,
+        Replay.feed(mem, rows, batches)) {
+      enrichStream(streamDf, dim, col("c_custkey") === col("user_id") + 1)
+        .select(col("event_id"), col("user_id"), col("c_mktsegment"))
+    }
+    spark.table(ran.name)
   }
 
   /** Streaming materialized view: replay a static events frame through a
@@ -1259,49 +1008,34 @@ object EventStream {
       batches: Int = 4, maxKeys: Int = 100000,
       maxRows: Int = ReplayInputMaxRows): DataFrame = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val rows = collectBounded(events.select(col("event_id").cast("long"),
         unix_micros(col("ts")), col("event_type").cast("string"),
         col("value").cast("double"))
       .as[(Long, Long, String, Double)], "incrementalAggReplay", maxRows)
       .sortBy(r => (r._2, r._1))
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, String, Double)]
-    val streamDf = mem.toDF().toDF("event_id", "ts_us", "event_type", "value")
-    val ckpt = java.nio.file.Files.createTempDirectory("incr_ckpt").toString
+    val mem = Replay.memoryStream[(Long, Long, String, Double)](spark)
     var state: Array[org.apache.spark.sql.Row] = Array.empty
     var stateSchema: org.apache.spark.sql.types.StructType = null
-    withReplayShuffle(spark) {
-      val q = streamDf.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val batchState = graft.operators.Incremental.aggState(
-            batch.select("event_type", "value"), Seq("event_type"), Seq("value"))
-          val merged =
-            if (state.isEmpty) batchState
-            else graft.operators.Incremental.mergeStates(Seq(
-              spark.createDataFrame(
-                java.util.Arrays.asList(state: _*), stateSchema),
-              batchState), Seq("event_type"))
-          val collected = merged.collect()
-          require(collected.length <= maxKeys,
-            s"incrementalAggReplay: ${collected.length} state keys exceed " +
-              s"maxKeys=$maxKeys — this replay holds state on the driver; " +
-              "use a keyed sink store for unbounded key domains")
-          stateSchema = merged.schema
-          state = collected
-          ()
-        }
-        .start()
-      try {
-        val chunk = math.max(1, math.ceil(rows.length.toDouble / batches).toInt)
-        rows.grouped(chunk).foreach { c =>
-          mem.addData(c.toSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    }
+    // Hdfs: the foreachBatch merge jobs below run under the replay's
+    // 8 partitions; the query itself holds no Spark state
+    Replay.run(spark, "incr", Hdfs, Sentinels, Replay.feed(mem, rows, batches),
+      Some { (batch: DataFrame, _: Long) =>
+        val batchState = graft.operators.Incremental.aggState(
+          batch.select("event_type", "value"), Seq("event_type"), Seq("value"))
+        val merged =
+          if (state.isEmpty) batchState
+          else graft.operators.Incremental.mergeStates(Seq(
+            spark.createDataFrame(
+              java.util.Arrays.asList(state: _*), stateSchema),
+            batchState), Seq("event_type"))
+        val collected = merged.collect()
+        require(collected.length <= maxKeys,
+          s"incrementalAggReplay: ${collected.length} state keys exceed " +
+            s"maxKeys=$maxKeys — this replay holds state on the driver; " +
+            "use a keyed sink store for unbounded key domains")
+        stateSchema = merged.schema
+        state = collected
+      })(mem.toDF().toDF("event_id", "ts_us", "event_type", "value"))
     require(stateSchema != null, "no batches processed")
     spark.createDataFrame(java.util.Arrays.asList(state: _*), stateSchema)
   }

@@ -424,7 +424,16 @@ class EventStreamSpec extends SparkSpec {
       "enrichReplay" -> (() =>
         EventStream.enrichReplay(spark, events, dim, maxRows = 4)),
       "incrementalAggReplay" -> (() =>
-        EventStream.incrementalAggReplay(spark, events, maxRows = 4)))
+        EventStream.incrementalAggReplay(spark, events, maxRows = 4)),
+      "streamingIndexIngestReplay" -> (() =>
+        graft.operators.Retrieval.streamingIndexIngestReplay(spark,
+          events.select($"event_id", $"event_type".as("text")),
+          "event_id", "text", "graft_test_maxrows_ix", maxRows = 4)),
+      "streamingIvfIngestReplay" -> (() =>
+        graft.operators.Similarity.streamingIvfIngestReplay(spark,
+          events.select($"event_id", lit(0).as("cell"),
+            array(lit(1.0f)).as("vec")),
+          "event_id", "cell", "vec", "graft_test_maxrows_ivf", maxRows = 4)))
     attempts.foreach { case (name, run) =>
       val e = intercept[IllegalArgumentException](run())
       assert(e.getMessage.contains("maxRows"), s"$name: ${e.getMessage}")
@@ -435,5 +444,147 @@ class EventStreamSpec extends SparkSpec {
         maxRows = EventStream.ReplayInputMaxRows + 1)
     }
     assert(over.getMessage.contains("out of"))
+  }
+
+  test("every replay helper leaves the session confs exactly as it found them") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled",
+      "spark.sql.streaming.stateStore.providerClass")
+    // getOption reports a registered key's default when it is unset;
+    // getAll tells an unset key apart from one set to that default
+    def confs = keys.map(k => (k, spark.conf.getOption(k), spark.conf.getAll.get(k)))
+    val events = Seq(
+      (1L, ts(0), 1L, "click", 1.0), (2L, ts(5), 1L, "purchase", 2.0),
+      (3L, ts(10), 2L, "click", 3.0), (4L, ts(40), 1L, "purchase", 4.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val dim = Seq((2L, "SEG")).toDF("c_custkey", "c_mktsegment")
+    val tmp = java.nio.file.Files.createTempDirectory("conf_policy")
+    val feed = tmp.resolve("in").toString
+    events.select("ts", "user_id", "value").coalesce(1).write.parquet(feed)
+    def pipeline(rocksDb: Boolean) = {
+      val run = tmp.resolve(s"run_$rocksDb")
+      EventStream.sessionWindowPipeline(spark, feed, run.resolve("out").toString,
+        run.resolve("ckpt").toString, rocksDb = rocksDb)
+    }
+    val helpers: Seq[(String, () => Any)] = Seq(
+      "sessionWindowsReplay" -> (() =>
+        EventStream.sessionWindowsReplay(spark, events, batches = 2)),
+      "dedupSessionWindowsReplay" -> (() =>
+        EventStream.dedupSessionWindowsReplay(spark, events, batches = 2)),
+      "sessionizeTimeoutReplay" -> (() =>
+        EventStream.sessionizeTimeoutReplay(spark, events, batches = 2)),
+      "sessionizeTwsReplay" -> (() =>
+        EventStream.sessionizeTwsReplay(spark, events, batches = 2)),
+      "twsStateSnapshot" -> (() =>
+        EventStream.twsStateSnapshot(spark, events, batches = 2)),
+      "lastNStateSnapshot" -> (() =>
+        EventStream.lastNStateSnapshot(spark, events, batches = 2)),
+      "typeCountsStateSnapshot" -> (() =>
+        EventStream.typeCountsStateSnapshot(spark, events, batches = 2)),
+      "sessionizeBootstrapReplay" -> (() =>
+        EventStream.sessionizeBootstrapReplay(spark, events, batches = 2)),
+      "sessionizeReplay" -> (() =>
+        EventStream.sessionizeReplay(spark, events, batches = 2)),
+      "dedupeReplay" -> (() =>
+        EventStream.dedupeReplay(spark, events, Seq("event_id"), batches = 2)),
+      "attributionReplay" -> (() =>
+        EventStream.attributionReplay(spark, events, batches = 2)),
+      "attributionReplay(left_outer)" -> (() =>
+        EventStream.attributionReplay(spark, events, batches = 2,
+          joinType = "left_outer")),
+      "enrichReplay" -> (() =>
+        EventStream.enrichReplay(spark, events, dim, batches = 2)),
+      "incrementalAggReplay" -> (() =>
+        EventStream.incrementalAggReplay(spark, events, batches = 2)),
+      "fileSourceReplay" -> (() => EventStream.fileSourceReplay(spark, events)),
+      "sessionWindowPipeline" -> (() => pipeline(rocksDb = false)),
+      "sessionWindowPipeline(rocksDb)" -> (() => pipeline(rocksDb = true)),
+      "streamingIndexIngestReplay" -> (() =>
+        graft.operators.Retrieval.streamingIndexIngestReplay(spark,
+          events.select($"event_id", $"event_type".as("text")),
+          "event_id", "text", "graft_test_conf_ix", buckets = 2, batches = 2)),
+      "streamingIvfIngestReplay" -> (() =>
+        graft.operators.Similarity.streamingIvfIngestReplay(spark,
+          events.select($"event_id", lit(0).as("cell"),
+            array(lit(1.0f), $"value".cast("float")).as("vec")),
+          "event_id", "cell", "vec", "graft_test_conf_ivf", batches = 2)))
+    val partitions = spark.conf.get(keys.head)
+    try {
+      // an unset key must come back unset, not set to its default
+      spark.conf.unset(keys.head)
+      helpers.foreach { case (name, run) =>
+        val before = confs
+        run()
+        assert(confs == before, name)
+      }
+      // set keys come back with their values when a replay throws inside
+      // Replay.run (here: the foreachBatch state-key bound)
+      spark.conf.set(keys.head, partitions)
+      spark.conf.set(keys(1), "true")
+      val before = confs
+      intercept[Exception] {
+        EventStream.incrementalAggReplay(spark, events, batches = 2, maxKeys = 1)
+      }
+      assert(confs == before)
+    } finally {
+      spark.conf.set(keys.head, partitions)
+      spark.conf.unset(keys(1))
+    }
+  }
+
+  test("sentinel-flushed replays run no zero-input micro-batch; the " +
+      "watermark-flushed x106 replay emits its sessions from one") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val inputRows = collection.mutable.ArrayBuffer[Long]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        inputRows.synchronized { inputRows += e.progress.numInputRows }
+    }
+    /** Input rows of each micro-batch `run` executes, in order. */
+    def batchInputs(run: => Any): Seq[Long] = {
+      org.apache.spark.GraftTestBus.flush(spark.sparkContext)
+      inputRows.synchronized(inputRows.clear())
+      run
+      org.apache.spark.GraftTestBus.flush(spark.sparkContext)
+      inputRows.synchronized(inputRows.toSeq)
+    }
+    val events = Seq(
+      (1L, ts(0), 1L, "click", 1.0), (2L, ts(5), 1L, "purchase", 2.0),
+      (3L, ts(10), 2L, "purchase", 3.0), (4L, ts(40), 1L, "click", 4.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    spark.streams.addListener(listener)
+    try {
+      Seq[(String, () => Any)](
+        "dedupeReplay" -> (() =>
+          EventStream.dedupeReplay(spark, events.union(events), Seq("event_id"),
+            batches = 2)),
+        "sessionizeTimeoutReplay" -> (() =>
+          EventStream.sessionizeTimeoutReplay(spark, events, batches = 2)),
+        "dedupSessionWindowsReplay" -> (() =>
+          EventStream.dedupSessionWindowsReplay(spark, events, batches = 2)),
+        "attributionReplay(left_outer)" -> (() =>
+          EventStream.attributionReplay(spark, events, batches = 2,
+            joinType = "left_outer"))
+      ).foreach { case (name, run) =>
+        val inputs = batchInputs(run())
+        assert(inputs.nonEmpty && inputs.forall(_ > 0), s"$name: $inputs")
+      }
+
+      // every session here is still open when the sentinel step's data
+      // batch runs; only the no-data batch after it can emit them
+      var replayed: Seq[org.apache.spark.sql.Row] = Nil
+      val inputs = batchInputs {
+        replayed = EventStream.sessionWindowsReplay(spark, events, batches = 2)
+          .orderBy("user_id", "session_start").collect().toSeq
+      }
+      assert(inputs.lastOption.contains(0L), s"x106 batches: $inputs")
+      val batch = EventStream.sessionWindows(events)
+        .orderBy("user_id", "session_start").collect().toSeq
+      assert(batch.length == 3)
+      assert(replayed == batch)
+    } finally spark.streams.removeListener(listener)
   }
 }
